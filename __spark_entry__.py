@@ -836,8 +836,8 @@ def bench_recrawl_maintain(spark, sf):
     )
     key = (id(spark.sparkContext), sf)
     if key not in _RECRAWL_PREV:
-        contribs = delta_ops.scored_contributions(old).localCheckpoint(eager=True)
-        agg = triples_ops.aggregate_triples(contribs).localCheckpoint(eager=True)
+        contribs = linking_ops._checkpoint(delta_ops.scored_contributions(old))
+        agg = linking_ops._checkpoint(triples_ops.aggregate_triples(contribs))
         _RECRAWL_PREV[key] = (agg, contribs)
     prev_agg, prev_contribs = _RECRAWL_PREV[key]
     new_agg, _ = delta_ops.maintain_snapshot(prev_agg, prev_contribs, old, new)
@@ -880,10 +880,8 @@ def _kg_edges(spark, sf):
             "text",
             "lang",
         )
-        _KG_EDGES[key] = (
-            pipeline.run(pages)["edges"]
-            .select("subj_id", "pred", "obj_id")
-            .localCheckpoint(eager=True)
+        _KG_EDGES[key] = linking_ops._checkpoint(
+            pipeline.run(pages)["edges"].select("subj_id", "pred", "obj_id")
         )
     return _KG_EDGES[key]
 

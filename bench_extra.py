@@ -133,18 +133,9 @@ def profile_pipeline(spark, sf_dir):
         ),
         out,
     )
-    canon_map = canon.select("norm", "canonical_id")
-    subj = canon_map.withColumnRenamed("norm", "_subj_norm").withColumnRenamed(
-        "canonical_id", "subj_id")
-    obj = canon_map.withColumnRenamed("norm", "_obj_norm").withColumnRenamed(
-        "canonical_id", "obj_id")
     _timed(
         spark, "triples:canon_join",
-        lambda: trips.withColumn("_subj_norm", linking.normalize_text(F.col("subj_text")))
-        .withColumn("_obj_norm", linking.normalize_text(F.col("obj_text")))
-        .join(subj, "_subj_norm", "left")
-        .join(obj, "_obj_norm", "left")
-        .drop("_subj_norm", "_obj_norm"),
+        lambda: pipeline.attach_canonical_ids(trips, canon),
         out,
     )
 

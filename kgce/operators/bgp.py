@@ -268,7 +268,7 @@ def reachable(
 
     Scale shape: BFS frontier expansion, one equi-join per hop over the
     (subj_id, obj_id) projection — never materializing paths.  The
-    frontier is localCheckpoint'ed each hop (O(reached nodes), not
+    frontier is checkpointed each hop (O(reached nodes), not
     O(edges)) so the lazy plan does not re-execute the prefix per
     iteration — the same fix shape as links.pagerank.  Frontier rows
     already seen at a lower hop are anti-joined away, so the loop
@@ -299,7 +299,7 @@ def reachable(
         )
         if reached is not None:
             nxt = nxt.join(reached.select("src", "node"), ["src", "node"], "left_anti")
-        nxt = nxt.localCheckpoint(eager=True)
+        nxt = _checkpoint(nxt)
         if nxt.isEmpty():
             break
         got = nxt.withColumn("hops", F.lit(hop))

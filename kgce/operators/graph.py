@@ -210,7 +210,7 @@ def label_propagation(
             .persist()
         )
     labels = sym.select("node").distinct().withColumn("label", F.col("node"))
-    labels = labels.localCheckpoint(eager=True)
+    labels = _checkpoint(labels)
     for _ in range(iterations):
         nbr_labels = sym.join(
             labels.select(F.col("node").alias("nbr"), "label"), "nbr"
@@ -219,13 +219,13 @@ def label_propagation(
         best = counted.groupBy("node").agg(
             F.min(F.struct((-F.col("n")).alias("neg_n"), F.col("label"))).alias("_b")
         )
-        labels = (
+        # O(nodes); truncates lineage per round
+        labels = _checkpoint(
             labels.select("node", F.col("label").alias("_old"))
             .join(best, "node", "left")
             .select(
                 "node", F.coalesce(F.col("_b.label"), F.col("_old")).alias("label")
             )
-            .localCheckpoint(eager=True)  # O(nodes); truncates lineage per round
         )
     sym.unpersist()
     return labels

@@ -31,7 +31,7 @@ Scale shape:
   PERSISTED — each of the K iterations re-reads that one cached
   edge table, joins the (node, rank) table on ``src``, and partially
   aggregates contributions by ``dst``.  The per-iteration contribution
-  table (O(nodes), not O(edges)) is eagerly localCheckpointed so every
+  table (O(nodes), not O(edges)) is eagerly checkpointed so every
   iteration's plan is depth-1 off a materialized table — a lazily
   chained loop would replay the whole prefix per iteration AND double
   it at the dangling-mass DAG fork (2^k within a lazy window; measured
@@ -245,7 +245,7 @@ def pagerank(
     redistribution; ranks sum to 1 every iteration.  Edge weights are
     uniform per out-link (duplicate (src,dst) rows act as weight).
     Scale shape in the module docstring: edges normalized + persisted
-    once; each iteration eagerly localCheckpoints the O(nodes)
+    once; each iteration eagerly checkpoints the O(nodes)
     contribution table (lineage depth stays 1) and folds the exact
     dangling mass in as a scalar literal read from that checkpoint —
     the only driver-side data is one float per iteration.  Verified
@@ -321,13 +321,13 @@ def pagerank(
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     prev = None
     for it in range(iters):
-        contribs = (
+        # O(nodes); truncates ALL lineage
+        contribs = _checkpoint(
             norm_edges.join(
                 ranks.select(F.col("node").alias("_s"), "rank"), "_s"
             )
             .groupBy(F.col("_d").alias("node"))
             .agg(F.sum(F.col("rank") * F.col("_w")).alias("_in"))
-            .localCheckpoint(eager=True)  # O(nodes); truncates ALL lineage
         )
         # prev iteration's checkpoint is unreachable once the new one is
         # materialized (this iteration's ranks read only `contribs`)

@@ -394,11 +394,10 @@ def predicate_canonical_map(
     # is vocabulary-sized
     e = _checkpoint(synonym_pairs.select("a", "b"))
     sym = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).persist()
-    labels = (
+    labels = _checkpoint(
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_rounds):
         nbr_min = (
@@ -406,7 +405,8 @@ def predicate_canonical_map(
             .groupBy(F.col("a").alias("node"))
             .agg(F.min("label").alias("_nbr"))
         )
-        new = (
+        # O(preds): vocabulary-sized
+        new = _checkpoint(
             labels.select("node", F.col("label").alias("_old"))
             .join(nbr_min, "node", "left")
             .select(
@@ -416,7 +416,6 @@ def predicate_canonical_map(
                 ),
                 F.col("_old"),
             )
-            .localCheckpoint(eager=True)  # O(preds): vocabulary-sized
         )
         changed = new.agg(
             F.sum((F.col("label") != F.col("_old")).cast("long")).alias("n")

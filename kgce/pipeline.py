@@ -1,12 +1,17 @@
 """End-to-end KG-construction pipeline (the north_star dataflow):
 
-pages ──mapInPandas──> mentions ──self-join──> scored pairs ──agg──> triples
+pages ──mapInPandas──> mentions ──group+explode──> scored pairs ──agg──> triples
                    └──> entity vocab ──MinHash-LSH──> edges ──CC──> canonical ids
 triples ⋈ canonical ids ──> (subj_id, pred, obj_id, ...) ──> nodes/edges tables
 
-Stage boundaries are exactly the checkpoint boundaries: run via
-``run_checkpointed`` each stage's output lands under the work dir with a
-per-bucket manifest, so a killed run resumes mid-stage.
+One composition (:func:`_compose`) runs the stages in that order; the
+stage boundaries are the stages of a STORE, which decides where each
+stage's output is kept.  :func:`run` uses the in-memory store (outputs
+stay lazy DataFrames; only a stage read more than once is
+materialized).  :func:`run_checkpointed` uses ``plans.lineage.StageRunner``:
+each stage's output lands under the work dir with a per-bucket (or, for
+a global stage, all-or-nothing) manifest, so a killed run resumes
+mid-stage.
 """
 
 from __future__ import annotations
@@ -18,30 +23,23 @@ from . import tagging
 from .operators import linking
 from .operators import triples as triples_ops
 from .plans import materialize
-from .plans.lineage import StageRunner
+from .plans.lineage import StageRunner, eval_set_fingerprint  # noqa: F401 (public)
 
 
-def canonical_triples(
-    mentions: DataFrame,
-    threshold: float = 0.6,
-    canon: DataFrame | None = None,
-    provenance_k: int | None = None,
-) -> DataFrame:
-    """Aggregated triples with canonical entity ids attached.
+def _scored_pairs(mentions: DataFrame) -> DataFrame:
+    return triples_ops.score_pairs(triples_ops.candidate_pairs_grouped(mentions))
 
-    Pass a precomputed ``canon`` (linking.canonicalize output) to reuse
-    one LSH + connected-components job across triples AND node building —
-    recomputing it is a whole second iterative CC job.  ``provenance_k``
-    adds a bounded top-k ``evidence_urls`` column (single-pass
-    aggregation — no extra corpus scan).
-    """
-    scored = triples_ops.score_pairs(triples_ops.candidate_pairs_grouped(mentions))
+
+def _aggregate(scored: DataFrame, provenance_k: int | None) -> DataFrame:
     if provenance_k is not None:
-        trips = triples_ops.aggregate_triples_with_provenance(scored, k=provenance_k)
-    else:
-        trips = triples_ops.aggregate_triples(scored)
-    if canon is None:
-        canon = linking.canonicalize(mentions, threshold=threshold)
+        return triples_ops.aggregate_triples_with_provenance(scored, k=provenance_k)
+    return triples_ops.aggregate_triples(scored)
+
+
+def attach_canonical_ids(trips: DataFrame, canon: DataFrame) -> DataFrame:
+    """Aggregated triples -> canonical-edges schema: ``subj_id``/``obj_id``
+    looked up by normalized surface form in ``canon`` (``norm``,
+    ``canonical_id``); ``evidence_urls`` is kept when present."""
     canon_map = canon.select("norm", "canonical_id")
     subj = canon_map.withColumnRenamed("norm", "_subj_norm").withColumnRenamed(
         "canonical_id", "subj_id"
@@ -75,9 +73,29 @@ def canonical_triples(
         "subj_type",
         "obj_type",
     ]
-    if provenance_k is not None:
+    if "evidence_urls" in trips.columns:
         cols.append("evidence_urls")
     return trips.select(*cols)
+
+
+def canonical_triples(
+    mentions: DataFrame,
+    threshold: float = 0.6,
+    canon: DataFrame | None = None,
+    provenance_k: int | None = None,
+) -> DataFrame:
+    """Aggregated triples with canonical entity ids attached.
+
+    Pass a precomputed ``canon`` (linking.canonicalize output) to reuse
+    one LSH + connected-components job across triples AND node building —
+    recomputing it is a whole second iterative CC job.  ``provenance_k``
+    adds a bounded top-k ``evidence_urls`` column (single-pass
+    aggregation — no extra corpus scan).
+    """
+    trips = _aggregate(_scored_pairs(mentions), provenance_k)
+    if canon is None:
+        canon = linking.canonicalize(mentions, threshold=threshold)
+    return attach_canonical_ids(trips, canon)
 
 
 def clean_pages(
@@ -309,33 +327,6 @@ def clean_pages(
     return out
 
 
-def eval_set_fingerprint(ev: DataFrame) -> list[int]:
-    """[row_count, content_hash] resume fingerprint of an eval set.
-
-    XOR over plain row hashes cancels duplicate rows (x ^ x = 0), so two
-    different eval sets whose delta is a duplicated PAIR would collide
-    (ADVICE r3) — and a resumed run would silently reuse a stale cached
-    clean stage, the exact leakage decontamination exists to prevent.
-    Folding each distinct row's MULTIPLICITY into the hashed value makes
-    duplicates non-cancelling: adding a second copy of row r changes
-    xxhash64(r, 1) to xxhash64(r, 2), a different contribution.  One
-    groupBy over the (small) eval set; order-independent via bit_xor.
-    """
-    cols = [F.col(c) for c in ev.columns]
-    fp = (
-        ev.groupBy(*cols)
-        .agg(F.count(F.lit(1)).alias("_kgce_mult"))
-        .agg(
-            F.sum("_kgce_mult").alias("n"),
-            F.coalesce(
-                F.bit_xor(F.xxhash64(*cols, F.col("_kgce_mult"))), F.lit(0)
-            ).alias("h"),
-        )
-        .first()
-    )
-    return [int(fp.n or 0), int(fp.h)]
-
-
 def structured_canonical(
     pages: DataFrame,
     canon_map: DataFrame,
@@ -420,58 +411,71 @@ def structured_canonical(
     return out.select(*cols)
 
 
-def run(
+class _InMemoryStore:
+    """The stage store of :func:`run`: a stage's output is returned as
+    the lazy DataFrame it is, except a stage the composition reads more
+    than once, which is materialized once with ``linking._checkpoint``.
+
+    That stage is ``mentions``: it feeds THREE consumers (triple chain,
+    linking vocabulary, node building); unmaterialized, each re-runs the
+    tagging UDF — a full corpus pass per consumer at crawl scale.
+    ``StageRunner`` gives the same guarantee by landing it as parquet.
+    """
+
+    _READ_MORE_THAN_ONCE = frozenset({"mentions"})
+
+    def _keep(self, stage: str, out: DataFrame) -> DataFrame:
+        return linking._checkpoint(out) if stage in self._READ_MORE_THAN_ONCE else out
+
+    def run(self, stage, input_df, transform, key="url"):
+        return self._keep(stage, transform(input_df))
+
+    def run_global(self, stage, build, config=None):
+        return self._keep(stage, build())
+
+
+def _compose(
+    store,
     pages: DataFrame,
-    link_threshold: float = 0.6,
-    clean: dict | None = None,
-    provenance_k: int | None = None,
-    structured: bool = False,
-    embed: dict | None = None,
-    aliases: dict | None = None,
-    infer: dict | None = None,
+    link_threshold: float,
+    clean: dict | None,
+    provenance_k: int | None,
+    structured: bool,
+    embed: dict | None,
+    aliases: dict | None,
+    infer: dict | None,
 ) -> dict[str, DataFrame]:
-    """Uncheckpointed single-job run (tests, small corpora).  ``clean``
-    (kwargs for :func:`clean_pages`) enables the hygiene pre-pass;
-    ``provenance_k`` carries a bounded top-k ``evidence_urls`` column
-    through triples into the edges table; ``structured`` unions the
-    declared JSON-LD triples (:func:`structured_canonical`) into the
-    edge set — extracted from the CLEANED pages, so hygiene-dropped
-    spam never asserts declared facts; ``embed`` (kwargs for
-    :func:`operators.kgembed.train_transe`, e.g. ``{"dim": 16,
-    "epochs": 3}``) trains TransE over the final edge set and attaches
-    the learned vector to each node as an ``embedding`` column (left
-    join — literal-only entities keep a null), ready for the ANN
-    entity-resolution stack; ``aliases`` (kwargs for
-    :func:`operators.coref.canonicalize_with_aliases`, e.g.
-    ``{"min_docs": 2, "match_type": False}``) unions intra-document
-    acronym/suffix alias edges into the canonicalization CC — the
-    CLEANED pages supply the acronym-definition scan, so
-    hygiene-dropped spam never defines an alias; ``infer`` (kwargs for
-    :func:`operators.rules.infer_chain_facts`, e.g.
-    ``{"min_pca_confidence": 0.9, "min_support": 3}``) mines chain
-    rules over the final edge set and adds an ``inferred`` DataFrame of
-    NEW (subj_id, pred, obj_id, confidence, n_rules) facts to the
-    output — the Knowledge-Vault promotion loop; inferred facts are
-    returned for curation, never silently merged into ``edges``."""
+    """The one pipeline composition, stage by stage; ``store`` (the
+    in-memory store or a ``StageRunner``) decides where each stage's
+    output is kept.  Bucketed stages (``mentions``, ``scored_pairs``)
+    are per-page, so a url-bucketed run of them is exact; global
+    stages (``clean_pages``, ``canon``) cross any bucketing —
+    dedup/boilerplate document frequencies and LSH pairs span buckets."""
     if clean is not None:
-        pages = clean_pages(pages, **clean)
-    # mentions feed THREE consumers (triple chain, linking vocabulary,
-    # node building); unmaterialized, each re-runs the tagging UDF —
-    # a full corpus pass per consumer at crawl scale.  run_checkpointed
-    # materializes this stage as parquet; the uncheckpointed path gets
-    # the same guarantee from a localCheckpoint.
-    mentions = linking._checkpoint(tagging.extract_mentions(pages))
+        raw_pages = pages
+        pages = store.run_global(
+            "clean_pages", lambda: clean_pages(raw_pages, **clean), config=clean
+        )
+    mentions = store.run("mentions", pages, tagging.extract_mentions, key="url")
+    scored = store.run("scored_pairs", mentions, _scored_pairs, key="url")
+    trips = _aggregate(scored, provenance_k)
     if aliases is not None:
         from .operators import coref
 
-        canon = coref.canonicalize_with_aliases(
-            mentions, pages, threshold=link_threshold, **aliases
+        canon = store.run_global(
+            "canon",
+            lambda: coref.canonicalize_with_aliases(
+                mentions, pages, threshold=link_threshold, **aliases
+            ),
+            config={"threshold": link_threshold, "aliases": sorted(aliases.items())},
         )
     else:
-        canon = linking.canonicalize(mentions, threshold=link_threshold)
-    trips = canonical_triples(
-        mentions, threshold=link_threshold, canon=canon, provenance_k=provenance_k
-    )
+        canon = store.run_global(
+            "canon",
+            lambda: linking.canonicalize(mentions, threshold=link_threshold),
+            config={"threshold": link_threshold},
+        )
+    trips = attach_canonical_ids(trips, canon)
     if structured:
         trips = trips.unionByName(
             structured_canonical(
@@ -511,13 +515,9 @@ def run(
     return out
 
 
-def run_checkpointed(
+def run(
     pages: DataFrame,
-    work_dir: str,
-    n_buckets: int = 8,
     link_threshold: float = 0.6,
-    salt_hot_domains: bool = True,
-    n_salt: int = 16,
     clean: dict | None = None,
     provenance_k: int | None = None,
     structured: bool = False,
@@ -525,134 +525,74 @@ def run_checkpointed(
     aliases: dict | None = None,
     infer: dict | None = None,
 ) -> dict[str, DataFrame]:
-    """Resumable run: mention extraction and triple aggregation land under
-    ``work_dir`` with per-bucket manifests (kill/re-run safe).
+    """Uncheckpointed single-job run (tests, small corpora).  ``clean``
+    (kwargs for :func:`clean_pages`) enables the hygiene pre-pass;
     ``provenance_k`` carries a bounded top-k ``evidence_urls`` column
-    through triples into the edges table (single-pass aggregation over
-    the checkpointed scored pairs — no extra corpus scan).
-    ``embed``/``aliases``/``infer`` mirror :func:`run`; the alias-aware
-    canonicalization replaces the same resumable "canon" global stage
-    (its manifest keys the whole cleaned corpus, so a resumed run reuses
-    it byte-identically), TransE training checkpoints per epoch
-    internally, and inference reads the materialized edge table.
+    through triples into the edges table; ``structured`` unions the
+    declared JSON-LD triples (:func:`structured_canonical`) into the
+    edge set — extracted from the CLEANED pages, so hygiene-dropped
+    spam never asserts declared facts; ``embed`` (kwargs for
+    :func:`operators.kgembed.train_transe`, e.g. ``{"dim": 16,
+    "epochs": 3}``) trains TransE over the final edge set and attaches
+    the learned vector to each node as an ``embedding`` column (left
+    join — literal-only entities keep a null), ready for the ANN
+    entity-resolution stack; ``aliases`` (kwargs for
+    :func:`operators.coref.canonicalize_with_aliases`, e.g.
+    ``{"min_docs": 2, "match_type": False}``) unions intra-document
+    acronym/suffix alias edges into the canonicalization CC — the
+    CLEANED pages supply the acronym-definition scan, so
+    hygiene-dropped spam never defines an alias; ``infer`` (kwargs for
+    :func:`operators.rules.infer_chain_facts`, e.g.
+    ``{"min_pca_confidence": 0.9, "min_support": 3}``) mines chain
+    rules over the final edge set and adds an ``inferred`` DataFrame of
+    NEW (subj_id, pred, obj_id, confidence, n_rules) facts to the
+    output — the Knowledge-Vault promotion loop; inferred facts are
+    returned for curation, never silently merged into ``edges``."""
+    return _compose(
+        _InMemoryStore(), pages, link_threshold, clean, provenance_k,
+        structured, embed, aliases, infer,
+    )
+
+
+def run_checkpointed(
+    pages: DataFrame,
+    work_dir: str,
+    n_buckets: int = 8,
+    link_threshold: float = 0.6,
+    salt_hot_domains: bool = True,
+    clean: dict | None = None,
+    provenance_k: int | None = None,
+    structured: bool = False,
+    embed: dict | None = None,
+    aliases: dict | None = None,
+    infer: dict | None = None,
+) -> dict[str, DataFrame]:
+    """Resumable run: the same composition and options as :func:`run`,
+    with every stage landing under ``work_dir`` (kill/re-run safe) and
+    the node/edge tables written there.  Mention extraction and pair
+    scoring are bucketed stages with per-bucket manifests; the hygiene
+    pass and canonicalization (the expensive iterative LSH +
+    connected-components job) are global stages, cached all-or-nothing,
+    so a resumed run skips them entirely and re-reads parquet, never
+    the raw corpus.  TransE training checkpoints per epoch internally.
 
     ``salt_hot_domains`` pre-spreads Zipf-skewed crawls: pages are
-    repartitioned by (domain, xxhash64(url) % n_salt) before the UDF
+    repartitioned by (domain, xxhash64(url) % 16) before the UDF
     stages so no task owns a whole hot domain (BASELINE.json:6,14).  The
     salt is a pure function of the url — deterministic across re-runs,
     so bucket manifests stay valid.
     """
     from .plans.skew import domain_of, salted_repartition
 
-    spark = pages.sparkSession
     if salt_hot_domains:
-        pages = salted_repartition(pages, domain_of(F.col("url")), n_salt=n_salt)
-    runner = StageRunner(spark, work_dir, n_buckets=n_buckets)
-
-    if clean is not None:
-        # GLOBAL stage: dedup/boilerplate document frequencies cross any
-        # bucketing, so the hygiene pass caches all-or-nothing (eval_docs
-        # is a DataFrame — excluded from the resume-config fingerprint)
-        clean_cfg = {k: v for k, v in clean.items() if not isinstance(v, DataFrame)}
-        ev = clean.get("eval_docs")
-        if ev is not None:
-            # the eval set must be part of the resume fingerprint: a
-            # resumed run with a DIFFERENT eval set silently reusing the
-            # cached clean output would leak the new benchmark into
-            # training data — the exact failure decontamination prevents
-            clean_cfg["eval_docs_fingerprint"] = eval_set_fingerprint(ev)
-        raw_pages = pages
-        pages = runner.run_global(
-            "clean_pages", lambda: clean_pages(raw_pages, **clean), config=clean_cfg
-        )
-    mentions = runner.run("mentions", pages, tagging.extract_mentions, key="url")
-    scored = runner.run(
-        "scored_pairs",
-        mentions,
-        lambda m: triples_ops.score_pairs(triples_ops.candidate_pairs(m)),
-        key="url",
+        pages = salted_repartition(pages, domain_of(F.col("url")))
+    out = _compose(
+        StageRunner(pages.sparkSession, work_dir, n_buckets=n_buckets),
+        pages, link_threshold, clean, provenance_k,
+        structured, embed, aliases, infer,
     )
-    # aggregation + linking are global (cross-bucket) stages; their inputs
-    # are the checkpointed outputs above, so a crash here re-reads parquet,
-    # not the raw corpus — and canonicalization (the expensive iterative
-    # LSH + connected-components job) is itself cached as a global stage,
-    # so a resumed run skips it entirely.
-    if provenance_k is not None:
-        trips = triples_ops.aggregate_triples_with_provenance(scored, k=provenance_k)
-    else:
-        trips = triples_ops.aggregate_triples(scored)
-    if aliases is not None:
-        from .operators import coref
-
-        alias_pages = pages
-        canon = runner.run_global(
-            "canon",
-            lambda: coref.canonicalize_with_aliases(
-                mentions, alias_pages, threshold=link_threshold, **aliases
-            ),
-            config={"threshold": link_threshold, "aliases": sorted(aliases.items())},
-        )
-    else:
-        canon = runner.run_global(
-            "canon",
-            lambda: linking.canonicalize(mentions, threshold=link_threshold),
-            config={"threshold": link_threshold},
-        )
-    canon_map = canon.select("norm", "canonical_id")
-    # unhinted for the same reason as canonical_triples: the canonical map
-    # can outgrow any broadcast limit at crawl scale, and a hint would
-    # force the broadcast regardless of autoBroadcastJoinThreshold.  AQE
-    # picks broadcast at runtime when the map is actually small.
-    trips = (
-        trips.withColumn("_sn", linking.normalize_text(F.col("subj_text")))
-        .withColumn("_on", linking.normalize_text(F.col("obj_text")))
-        .join(
-            canon_map.withColumnRenamed("norm", "_sn").withColumnRenamed("canonical_id", "subj_id"),
-            "_sn",
-            "left",
-        )
-        .join(
-            canon_map.withColumnRenamed("norm", "_on").withColumnRenamed("canonical_id", "obj_id"),
-            "_on",
-            "left",
-        )
-        .drop("_sn", "_on")
-    )
-    if structured:
-        # declared JSON-LD triples from the (checkpointed, cleaned)
-        # pages — a narrow scan, so a crash mid-union re-reads the
-        # cached clean_pages parquet, never the raw corpus
-        trips = trips.unionByName(
-            structured_canonical(pages, canon_map, provenance_k)
-        )
-    nodes = materialize.build_nodes(canon, mentions)
-    edges = materialize.build_edges(trips)
-    if embed is not None:
-        from .operators.kgembed import entity_vectors_for_ann, train_transe
-
-        ent_emb, _rel_emb, _losses = train_transe(edges, **embed)
-        vecs = entity_vectors_for_ann(ent_emb).withColumnRenamed("id", "canonical_id")
-        nodes = nodes.join(vecs, "canonical_id", "left")
-    materialize.write_nodes(nodes, work_dir)
-    materialize.write_edges(edges, work_dir)
-    out = {"mentions": mentions, "triples": trips, "nodes": nodes, "edges": edges}
-    if infer is not None:
-        from .operators import rules as rules_ops
-
-        mined = rules_ops.mine_chain_rules(
-            edges,
-            **{k: v for k, v in infer.items() if k in ("min_support", "max_mid_degree")},
-        )
-        out["rules"] = mined
-        out["inferred"] = rules_ops.infer_chain_facts(
-            edges,
-            mined,
-            **{
-                k: v
-                for k, v in infer.items()
-                if k in ("min_pca_confidence", "max_mid_degree")
-            },
-        )
+    materialize.write_nodes(out["nodes"], work_dir)
+    materialize.write_edges(out["edges"], work_dir)
     return out
 
 

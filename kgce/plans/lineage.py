@@ -11,6 +11,8 @@ resumes where it stopped and produces byte-identical output.
 A config fingerprint is stored alongside; resuming with a different stage
 configuration aborts — mirroring the reference's label2idx compatibility
 check on resume (/root/reference/src/transformer_ner/task.py:561-571).
+A DataFrame-valued config entry (an eval set) is stored as its content
+fingerprint, computed only by this (resumable) store.
 
 The wall-clock used for ``wall_ms`` is metrics-only; it never influences
 data content (determinism invariant).
@@ -73,8 +75,8 @@ class StageRunner:
         scan cost.
 
         Requires ``key`` to survive ``transform`` (true for every kgce
-        stage — mentions/pairs keep ``url``); when it does not, the wave
-        falls back to bucket-at-a-time filtered writes.
+        stage — mentions/pairs keep ``url``); a transform that drops it
+        raises ``ValueError``.
         """
         root, ddir, mdir = self._paths(stage)
         root.mkdir(parents=True, exist_ok=True)
@@ -106,20 +108,16 @@ class StageRunner:
             t0 = time.monotonic()
             part = bucketed.filter(F.col("_bucket").isin(wave))
             out = transform(part.drop("_bucket"))
-            if key in out.columns:
-                # single-scan path: one job writes every wave bucket
-                (
-                    out.withColumn("bucket", bucket_col)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("bucket")
-                    .parquet(str(ddir))
-                )
-            else:  # pragma: no cover - no kgce stage drops its key
-                for b in wave:
-                    transform(
-                        bucketed.filter(F.col("_bucket") == b).drop("_bucket")
-                    ).write.mode("overwrite").parquet(str(ddir / f"bucket={b}"))
+            if key not in out.columns:
+                raise ValueError(f"stage '{stage}': transform drops key column '{key}'")
+            # one job writes every wave bucket
+            (
+                out.withColumn("bucket", bucket_col)
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(str(ddir))
+            )
             # per-bucket input hash: ONE key-column-pruned scan per wave
             hashes = {
                 r._bucket: r.h
@@ -170,11 +168,21 @@ class StageRunner:
         entity canonicalization: LSH pairs span buckets, so per-bucket
         checkpointing would silently drop cross-bucket links).  Resume
         granularity is all-or-nothing for such stages by construction.
+
+        A DataFrame-valued ``config`` entry ``k`` is stored as
+        ``k_fingerprint`` (:func:`eval_set_fingerprint`): resuming with a
+        different eval set must not silently reuse a cached clean stage.
         """
         root, ddir, mdir = self._paths(stage)
         root.mkdir(parents=True, exist_ok=True)
+        cfg = {}
+        for k, v in (config or {}).items():
+            if isinstance(v, DataFrame):
+                cfg[f"{k}_fingerprint"] = eval_set_fingerprint(v)
+            else:
+                cfg[k] = v
         cfg_file = root / "config.json"
-        cfg_json = json.dumps({"global": True, **(config or {})}, sort_keys=True)
+        cfg_json = json.dumps({"global": True, **cfg}, sort_keys=True)
         if cfg_file.exists():
             if cfg_file.read_text() != cfg_json:
                 raise StageConfigMismatch(
@@ -201,16 +209,28 @@ class StageRunner:
         return self.spark.read.parquet(str(mdir))
 
 
-def keep_latest_n(manifest_df: DataFrame, n: int, order_col: str = "wall_ms") -> DataFrame:
-    """K5/W6 retention pattern (reference checkpoint GC, task.py:146-151):
-    newest N by a monotonic column; the complement is the GC set.
-    Manifests are one row per bucket per attempt — bounded, so the
-    global window is safe (tiny_global_window docstring)."""
-    from .partitioning import tiny_global_window
+def eval_set_fingerprint(ev: DataFrame) -> list[int]:
+    """[row_count, content_hash] resume fingerprint of an eval set.
 
-    w = tiny_global_window(F.desc(order_col))
-    return (
-        manifest_df.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= n)
-        .drop("_rk")
+    XOR over plain row hashes cancels duplicate rows (x ^ x = 0), so two
+    different eval sets whose delta is a duplicated PAIR would collide
+    (ADVICE r3) — and a resumed run would silently reuse a stale cached
+    clean stage, the exact leakage decontamination exists to prevent.
+    Folding each distinct row's MULTIPLICITY into the hashed value makes
+    duplicates non-cancelling: adding a second copy of row r changes
+    xxhash64(r, 1) to xxhash64(r, 2), a different contribution.  One
+    groupBy over the (small) eval set; order-independent via bit_xor.
+    """
+    cols = [F.col(c) for c in ev.columns]
+    fp = (
+        ev.groupBy(*cols)
+        .agg(F.count(F.lit(1)).alias("_kgce_mult"))
+        .agg(
+            F.sum("_kgce_mult").alias("n"),
+            F.coalesce(
+                F.bit_xor(F.xxhash64(*cols, F.col("_kgce_mult"))), F.lit(0)
+            ).alias("h"),
+        )
+        .first()
     )
+    return [int(fp.n or 0), int(fp.h)]

@@ -313,7 +313,12 @@ def build_nodes(canon: DataFrame, mentions: DataFrame, n_buckets: int = 32) -> D
             F.min("norm").alias("canonical_text"),
             F.collect_set("norm").alias("aliases"),
             F.sum(F.coalesce("n_mentions", F.lit(0))).alias("n_mentions"),
-            F.max_by("type", F.coalesce("n_mentions", F.lit(0))).alias("type"),
+            # most mentions first, then the smallest type — the same
+            # tie-break as the per-surface pick above, so the pick never
+            # depends on row order
+            F.min_by(
+                "type", F.struct(-F.coalesce("n_mentions", F.lit(0)), F.col("type"))
+            ).alias("type"),
         )
         .withColumn("bucket", F.pmod(F.col("canonical_id"), F.lit(n_buckets)).cast("int"))
     )

@@ -1,6 +1,7 @@
 """End-to-end pipeline: pages -> triples -> canonical ids -> nodes/edges,
 plus the checkpointed variant writing real outputs."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from kgce import pipeline, schemas, synth
@@ -535,3 +536,79 @@ def test_pipeline_run_with_embeddings(spark):
     for r in rows:
         if r.embedding is not None:
             assert abs(math.sqrt(sum(v * v for v in r.embedding)) - 1.0) < 1e-5
+
+
+def _graph_fingerprint(df):
+    """(rows, bit_xor of xxhash64 over every column): order-free, exact.
+    Set-valued string arrays (node aliases, evidence urls) are sorted."""
+    cols = [
+        F.array_sort(c) if t == "array<string>" else F.col(c)
+        for c, t in df.dtypes
+    ]
+    r = df.agg(
+        F.count("*").alias("n"),
+        F.coalesce(F.bit_xor(F.xxhash64(*cols)), F.lit(0)).alias("h"),
+    ).first()
+    return r.n, r.h
+
+
+def _parity_pages(spark, case):
+    rows = list(synth.gen_pages(30, seed=61))
+    if case == "clean_prov_structured":
+        # declared JSON-LD triples on three ordinary pages
+        ld = '{"@type": "Organization", "name": "Acme", "brand": "Anvils"}'
+        for r in rows[:3]:
+            r["html"] = (
+                f'<html><body><script type="application/ld+json">{ld}</script>'
+                "</body></html>"
+            ).encode("utf-8")
+    else:
+        for i, t in enumerate((
+            "Barack Obama visited Geneva and later Obama spoke.",
+            "United Nations (UN) met. People praised the United Nations"
+            " today and the UN agreed.",
+        )):
+            rows.append({"url": f"http://alias{i}.example/", "warc_ts": None,
+                         "html": None, "text": t, "lang": "en"})
+    return spark.createDataFrame(rows, schema=schemas.PAGES), rows
+
+
+@pytest.mark.parametrize("case", ["clean_prov_structured", "aliases_infer_embed"])
+def test_run_and_run_checkpointed_build_the_same_graph(spark, tmp_path, case):
+    """run() and run_checkpointed() are one composition over two stage
+    stores, so every option gives the same triples, nodes, edges and
+    inferred facts on both entry points (full fingerprints, node type
+    and TransE vectors included)."""
+    pages, rows = _parity_pages(spark, case)
+    if case == "clean_prov_structured":
+        ev = spark.createDataFrame([(1, rows[4]["text"])], "doc_id long, text string")
+        opts = dict(clean={"eval_docs": ev, "decontam_n": 5}, provenance_k=2,
+                    structured=True)
+        tables = ("triples", "nodes", "edges")
+    else:
+        opts = dict(aliases={"min_docs": 1, "match_type": False},
+                    infer={"min_support": 1, "min_pca_confidence": 0.5},
+                    embed={"dim": 8, "epochs": 1, "lr": 0.5})
+        tables = ("triples", "nodes", "edges", "inferred")
+    mem = pipeline.run(pages, **opts)
+    ck = pipeline.run_checkpointed(pages, str(tmp_path / "wd"), n_buckets=2, **opts)
+    for t in tables:
+        assert _graph_fingerprint(mem[t]) == _graph_fingerprint(ck[t]), t
+    assert mem["triples"].count() > 0
+    if case == "clean_prov_structured":
+        assert mem["triples"].filter(F.col("pred").startswith("sdo:")).count() > 0
+        kept = spark.read.parquet(str(tmp_path / "wd" / "clean_pages" / "data"))
+        assert rows[4]["url"] not in {r.url for r in kept.select("url").collect()}
+    else:
+        assert mem["inferred"].count() > 0
+        assert "embedding" in ck["nodes"].columns
+
+
+def test_stage_runner_rejects_transform_that_drops_key(spark, tmp_path):
+    """A bucketed stage whose transform drops the bucket key cannot be
+    written per bucket; StageRunner names the stage instead."""
+    from kgce.plans.lineage import StageRunner
+
+    runner = StageRunner(spark, str(tmp_path / "wd"), n_buckets=2)
+    with pytest.raises(ValueError, match="'pairs'"):
+        runner.run("pairs", _pages(spark, 4), lambda df: df.drop("url"), key="url")

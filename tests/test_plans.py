@@ -115,6 +115,38 @@ def test_build_nodes_no_sort_aggregate(spark):
     assert "SortAggregate" not in plan
 
 
+def test_build_nodes_type_tie_is_layout_free(spark):
+    """Node type = the type with the most mentions, ties to the smallest
+    type, whatever the row order or shuffle partitioning.  Every entity
+    here has two surfaces with different types and equal mention counts
+    (and the second surface is itself a tie between two types)."""
+    from kgce.plans import materialize
+
+    canon_rows, mention_rows = [], []
+    for i in range(24):
+        a, b = f"alpha {i}", f"beta {i}"
+        canon_rows += [(a, i, i), (b, i + 1000, i)]
+        mention_rows += [(a, "PER"), (a, "PER"), (b, "ORG"), (b, "LOC")]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    picks = []
+    try:
+        for n_parts, step in ((1, -1), (7, 1)):  # input order reversed / kept
+            spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+            canon = spark.createDataFrame(
+                canon_rows[::step], "norm string, entity_key long, canonical_id long"
+            )
+            mentions = spark.createDataFrame(mention_rows[::step], "text string, type string")
+            nodes = materialize.build_nodes(
+                canon.repartition(n_parts), mentions.repartition(n_parts)
+            )
+            picks.append({r.canonical_id: r.type for r in nodes.collect()})
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # "beta i" resolves its own ORG/LOC tie to LOC; LOC then ties PER at
+    # two mentions and is the smaller type
+    assert picks[0] == picks[1] == {i: "LOC" for i in range(24)}
+
+
 def test_asof_join_single_shuffle(spark):
     """The as-of join must stay a union + ONE window shuffle — a rank- or
     range-join formulation would explode pairs per key."""
